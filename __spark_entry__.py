@@ -106,7 +106,7 @@ def _replayed_table(
     ev = gen_event_log_portable(
         spark, n_events, n_docs, batch_size=batch_size, hot_pct=hot_pct
     )
-    table = replay_log(table, ev, n_salts=8)
+    table = replay_log(table, ev)
     _REPLAY_CACHE[key] = root
     return table
 
@@ -170,7 +170,7 @@ def q_cdc_mor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, b in enumerate(bids):
             table = apply_batch(
                 table, ev.filter(F.col("batch_id") == b), b,
-                n_salts=8, merge_strategy="delta",
+                merge_strategy="delta",
             )
             if i == 1:
                 table = table.compact_if_needed(ratio=0.0)
@@ -204,7 +204,7 @@ def q_cdc_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = os.path.join(tempfile.mkdtemp(prefix="icebox_del_"), "t")
         table = IceboxTable.create(spark, root, BASE_SCHEMA, n_buckets=16)
         ev = gen_event_log_portable(spark, 3000, 300, batch_size=1000, hot_pct=20)
-        table = replay_log(table, ev, n_salts=8, merge_strategy="delta")
+        table = replay_log(table, ev, merge_strategy="delta")
         table = delete_where(table, "n_tok % 7 = 0", op_id="audit1")
         table = purge_keys(table, _PURGE_KEYS, op_id="gdpr1")
         table = table.compact_if_needed(ratio=0.0)
@@ -402,10 +402,10 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tok", F.col("n_tok").cast("long")
     )
     b2 = ev.filter(F.col("batch_id") == 2).withColumnRenamed("source", "origin")
-    table = apply_batch(table, b0, 0, n_salts=8)
-    table = apply_batch(table, b1, 1, n_salts=8)
+    table = apply_batch(table, b0, 0)
+    table = apply_batch(table, b1, 1)
     table = table.rename_column("source", "origin")
-    table = apply_batch(table, b2, 2, n_salts=8)
+    table = apply_batch(table, b2, 2)
     return table.read().select(
         "doc_id",
         F.concat_ws(",", "tokens").alias("tokens_csv"),
@@ -532,7 +532,7 @@ def q_cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             r["batch_id"] for r in ev.select("batch_id").distinct().collect()
         )
         for b in bids:
-            src = apply_batch(src, ev.filter(F.col("batch_id") == b), b, n_salts=8)
+            src = apply_batch(src, ev.filter(F.col("batch_id") == b), b)
             mv.source = src
             mv.refresh()
             idx.source = src

@@ -152,7 +152,7 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, list[
 
 
 def bench_cdc_throughput(
-    spark, n_events: int, n_batches: int, n_buckets: int = 64, n_salts: int = 16
+    spark, n_events: int, n_batches: int, n_buckets: int = 64
 ) -> dict:
     """The north metric: sustained events/sec applied to the table.
 
@@ -182,7 +182,7 @@ def bench_cdc_throughput(
         t_w = IceboxTable.create(
             spark, os.path.join(work, "t_warm"), BASE_SCHEMA, n_buckets=n_buckets
         )
-        replay_log(t_w, warm_ev, n_salts=n_salts, merge_strategy="delta")
+        replay_log(t_w, warm_ev, merge_strategy="delta")
         # this run + the CoW reps below warm both merge paths — the
         # query-phase _warm_write_paths would be a duplicate
         global _WRITE_PATHS_WARM
@@ -200,8 +200,7 @@ def bench_cdc_throughput(
                 n_buckets=n_buckets,
             )
             t0 = time.perf_counter()
-            t_mor = replay_log(t_mor, log, n_salts=n_salts,
-                               merge_strategy="delta")
+            t_mor = replay_log(t_mor, log, merge_strategy="delta")
             mor_reps.append(time.perf_counter() - t0)
         mor_sec = sum(mor_reps) / len(mor_reps)
         t0 = time.perf_counter()
@@ -220,7 +219,7 @@ def bench_cdc_throughput(
                 n_buckets=n_buckets,
             )
             t0 = time.perf_counter()
-            t_cow = replay_log(t_cow, log, n_salts=n_salts)
+            t_cow = replay_log(t_cow, log)
             cow_reps.append(time.perf_counter() - t0)
         cow_sec = sum(cow_reps) / len(cow_reps)
 

@@ -28,25 +28,25 @@ dropDuplicates (resolve-footprints.scala:96) to a deterministic window.
 
 Scale design (what survives a 1000-executor / 100 TB target):
 
-  * dedup strategies (identical results, tested against each other):
-      - "agg" (apply default): one hash aggregate
-        `max_by(payload, (lsn, op_rank))` per key. Tungsten's PARTIAL
-        aggregation reduces every map partition to one candidate per key
-        BEFORE the exchange — each map task acts as a salt bucket, so a
-        hot key ships at most #map-tasks rows through the shuffle. This
-        is the salted two-phase pattern executed by the engine itself,
-        one exchange, no sort.
-      - "window" (the explicit two-phase form): phase 1 ranks within
-        (doc_id, salt), phase 2 ranks the ≤ n_salts survivors — the
-        reference's shifted-grid trick
-        (resolve-footprints.scala:104-110,128-133) re-applied to hash
-        salts. Two exchanges + sorts; kept as the spec-literal path.
+  * dedup: apply_batch runs ONE hash aggregate
+    `max_by(payload, (lsn, op_rank))` per key (_dedup_with_stats).
+    Tungsten's PARTIAL aggregation reduces every map partition to one
+    candidate per key BEFORE the exchange — each map task acts as a salt
+    bucket, so a hot key ships at most #map-tasks rows through the
+    shuffle. This is the salted two-phase pattern executed by the engine
+    itself, one exchange, no sort. The explicit two-phase form (phase 1
+    ranks within (doc_id, salt), phase 2 ranks the ≤ n_salts survivors —
+    the reference's shifted-grid trick,
+    resolve-footprints.scala:104-110,128-133, re-applied to hash salts)
+    is the standalone operator lww_dedup(strategy="window"), tested equal
+    to the aggregate; no apply path uses it.
   * merge strategies:
       - "delta" (merge-on-read — the steady-state production shape at
         100 TB): the deduped winners are appended as per-bucket delta
-        files (icebox.commit_delta); per-batch write cost is O(batch),
-        never O(table). Reads LWW-merge base ∪ deltas; compact_if_needed
-        folds deltas back when they outgrow a ratio of the base.
+        files (icebox stage_delta + commit_staged_delta); per-batch
+        write cost is O(batch), never O(table). Reads LWW-merge base ∪
+        deltas; compact_if_needed folds deltas back when they outgrow a
+        ratio of the base.
       - "join" (copy-on-write when the deduped batch is broadcastable):
         `target LEFT JOIN broadcast(winners)` — the big side never
         shuffles and never sorts; additions come from an existence probe
@@ -60,15 +60,15 @@ Scale design (what survives a 1000-executor / 100 TB target):
     reference reading one cty= prefix,
     /root/reference/citygml/build-citygml.sh:37); no job ever scans the
     full table for bookkeeping;
-  * per batch with the default "agg" dedup: the CoW paths run ONE
-    stats+dedup job over the raw events (stats fold into the dedup
-    aggregate, _dedup_with_stats) and ONE merge/write job; the delta path
-    is FUSED further (_apply_delta_fused): one heavy
-    scan→dedup→sorted-write job (per-winner stats ride along as hidden
-    parquet columns) plus one tiny per-bucket rollup over the written
-    compact file — no persist of the batch, exactly one pass over raw
-    events. Driver work is O(#touched buckets) — one small collect, one
-    O(buckets) manifest write — never O(#events).
+  * per batch: the CoW paths run ONE stats+dedup job over the raw
+    events (stats fold into the dedup aggregate, _dedup_with_stats) and
+    ONE merge/write job; the delta path is FUSED further
+    (_apply_delta_fused): one heavy scan→dedup→sorted-write job
+    (per-winner stats ride along as hidden parquet columns) plus one
+    tiny per-bucket rollup over the written compact file — no persist of
+    the batch, exactly one pass over raw events. Driver work is
+    O(#touched buckets) — one small collect, one O(buckets) manifest
+    write — never O(#events).
 """
 
 from __future__ import annotations
@@ -284,9 +284,7 @@ def apply_batch(
     table: IceboxTable,
     events: DataFrame,
     batch_id: int | str,
-    n_salts: int = 16,
     tag_prefix: str = "batch",
-    dedup_strategy: str = "agg",
     merge_strategy: str = "auto",
     retry_on_conflict: int = 0,
     quarantine_dir: str | None = None,
@@ -339,14 +337,13 @@ def apply_batch(
     merge_strategy: "auto" broadcasts the deduped batch when it is small
     enough (steady-state CDC), else shuffles; "join"/"shuffle" force.
     "delta" writes the winners as merge-on-read delta files — per-batch
-    write cost is O(batch), never O(table) (see icebox.commit_delta).
+    write cost is O(batch), never O(table) (see _apply_delta_fused).
 
     Lineage semantics: rows_upserted counts non-delete winners,
     rows_deleted counts delete winners (tombstones written) — both are
     batch-intrinsic, so lineage needs no target probe.
 
-    Per-batch Spark jobs with the default "agg" dedup: ONE stats/dedup
-    job over the raw events (see _dedup_with_stats) and ONE merge+write
+    Per-batch Spark jobs: ONE stats/dedup job over the raw events (see _dedup_with_stats) and ONE merge+write
     job. A batch rejected for malformed events leaves no trace: the
     schema evolution normalize_events applied in-memory is rolled back.
     """
@@ -384,7 +381,7 @@ def apply_batch(
                 "refusing to apply (set quarantine_dir to route them to "
                 "the dead-letter queue instead)"
             )
-    if merge_strategy == "delta" and dedup_strategy == "agg":
+    if merge_strategy == "delta":
         # fused fast path: ONE heavy job (scan → dedup agg → sorted delta
         # write, per-winner stats riding along as extra parquet columns),
         # then a tiny stats job over the written compact file — no
@@ -393,55 +390,20 @@ def apply_batch(
             table, ev, batch_id, tag, saved_schema_id, saved_schemas,
             retry_on_conflict=retry_on_conflict,
         )
-    winners = None
-    ev_persisted = False
+    winners = _dedup_with_stats(ev, key, table).persist()
     try:
-        if dedup_strategy == "agg":
-            winners = _dedup_with_stats(ev, key, table).persist()
-            stats = (
-                winners.groupBy("_b")
-                .agg(
-                    F.sum("_n_ev").alias("events_applied"),
-                    F.max("_wm").alias("lsn_watermark"),
-                    F.sum("_bad").alias("bad_events"),
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
-                    F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
-                    F.min(key).alias("_kmin"),
-                    F.max(key).alias("_kmax"),
-                )
-                .collect()
+        stats = (
+            winners.groupBy("_b")
+            .agg(
+                F.sum("_n_ev").alias("events_applied"),
+                F.max("_wm").alias("lsn_watermark"),
+                F.sum("_bad").alias("bad_events"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
+                F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
             )
-        else:
-            # spec-literal window path: dedup and stats are separate scans
-            ev = ev.persist()
-            ev_persisted = True
-            winners = (
-                lww_dedup(ev, key=key, n_salts=n_salts, strategy=dedup_strategy)
-                .withColumn("_b", table.bucket_of())
-                .persist()
-            )
-            stats = (
-                ev.withColumn("_b", table.bucket_of())
-                .groupBy("_b")
-                .agg(
-                    F.count(F.lit(1)).alias("events_applied"),
-                    F.max("lsn").alias("lsn_watermark"),
-                    F.sum(_bad_event_pred(key).cast("long")).alias("bad_events"),
-                )
-                .join(
-                    winners.groupBy("_b").agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
-                        F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
-                        F.min(key).alias("_kmin"),
-                        F.max(key).alias("_kmax"),
-                    ),
-                    "_b",
-                    "full",
-                )
-                .collect()
-            )
+            .collect()
+        )
         bad = sum(r["bad_events"] or 0 for r in stats)
         if bad:
             table.manifest["current_schema_id"] = saved_schema_id
@@ -488,23 +450,6 @@ def apply_batch(
             "winners": n_winners,
         }
 
-        if merge_strategy == "delta":
-            deltas = winners.select(
-                "_b",
-                F.col(key),
-                *[F.col(c) for c in cols if c != key],
-                F.col("lsn").alias("_lsn"),
-                (F.col("op") == "delete").alias("_tombstone"),
-            )
-            bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats if r["n"]}
-            key_bounds = {
-                int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats if r["n"]
-            }
-            return table.commit_delta(
-                deltas, bucket_rows, tag=tag, lineage=lineage, summary=summary,
-                key_bounds=key_bounds, retry_on_conflict=retry_on_conflict,
-            )
-
         # target rows (incl. tombstones) of touched buckets only — the
         # analog of the reference reading one cty= prefix,
         # /root/reference/citygml/build-citygml.sh:37
@@ -524,10 +469,7 @@ def apply_batch(
             retry_on_conflict=retry_on_conflict,
         )
     finally:
-        if ev_persisted:
-            ev.unpersist()
-        if winners is not None:
-            winners.unpersist()
+        winners.unpersist()
 
 
 def _apply_delta_fused(
@@ -552,9 +494,9 @@ def _apply_delta_fused(
              bucket_rows, lineage.
       then the metadata-only manifest publish.
 
-    Versus the generic path this removes the winners persist (no cache
+    Unlike the copy-on-write paths it persists no winners (no cache
     serialization of token arrays — the dominant per-batch constant
-    measured at small batch sizes) and the separate write job. ANY
+    measured at small batch sizes) and runs no separate write job. ANY
     failure after the stage (malformed batch, executor loss during the
     stats job, ConcurrentCommitError at publish) deletes the staged dir
     and rolls back the in-memory schema evolution — a failed apply
@@ -777,8 +719,6 @@ def _merged_schema(table: IceboxTable) -> StructType:
 def replay_log(
     table: IceboxTable,
     log: DataFrame,
-    n_salts: int = 16,
-    dedup_strategy: str = "agg",
     merge_strategy: str = "auto",
 ) -> IceboxTable:
     """Batch-mode replay: apply the log's batches in batch_id order.
@@ -795,8 +735,6 @@ def replay_log(
             table,
             log.filter(F.col("batch_id") == b),
             b,
-            n_salts=n_salts,
-            dedup_strategy=dedup_strategy,
             merge_strategy=merge_strategy,
         )
     return table

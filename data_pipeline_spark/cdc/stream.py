@@ -33,7 +33,6 @@ def run_stream(
     table_root: str,
     checkpoint_dir: str,
     query_name: str = "cdc",
-    n_salts: int = 16,
     max_files_per_trigger: int | None = None,
     await_all: bool = True,
     merge_strategy: str = "auto",
@@ -196,7 +195,6 @@ def run_stream(
                 table,
                 batch_df,
                 batch_id=epoch_id,
-                n_salts=n_salts,
                 tag_prefix=f"stream:{query_name}",
                 merge_strategy=merge_strategy,
                 quarantine_dir=quarantine_dir,

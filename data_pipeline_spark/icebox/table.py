@@ -24,7 +24,8 @@ Invariants:
     rewrote it); merge-on-read delta commits layer on top in list order,
     and compaction prunes a bucket from delta entries' bucket_rows
     without touching the immutable delta files;
-  * commit = exclusive-create manifest file (the durable commit point)
+  * commit (always through IceboxTable._publish) = exclusive-create
+    manifest file (the durable commit point)
     then os.replace CURRENT; a crash before the manifest link leaves
     orphans only, a crash between link and swap is rolled forward by the
     next load().
@@ -297,10 +298,9 @@ class IceboxTable:
             if c not in by_name:
                 raise ValueError(f"immutable col {c!r} not in schema")
             imm.append(by_name[c])
-        manifest = {
-            "snapshot_id": 0,
-            "parent_id": None,
-            "tag": None,
+        # the empty parent: _publish numbers the first snapshot 0
+        parent = {
+            "snapshot_id": None,
             "committed_tags": [],
             "key": key,
             "n_buckets": n_buckets,
@@ -312,11 +312,10 @@ class IceboxTable:
             "buckets": {},
             "deltas": [],
             "lineage_paths": [],
-            "summary": {"operation": "create"},
         }
-        t = IceboxTable(spark, root, manifest)
-        t._write_manifest(manifest)
-        return t
+        return IceboxTable(spark, root, parent)._publish(
+            {"summary": {"operation": "create"}}
+        )
 
     @staticmethod
     def load(
@@ -352,12 +351,7 @@ class IceboxTable:
                 sid += 1
             newest = f"snap-{sid:08d}.json"
             if newest != name:
-                cur_tmp = os.path.join(meta_dir, f"CURRENT.tmp-{uuid.uuid4().hex[:8]}")
-                with open(cur_tmp, "w") as f:
-                    f.write(newest)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(cur_tmp, os.path.join(meta_dir, "CURRENT"))
+                _swap_current(meta_dir, newest)
                 name = newest
         else:
             name = f"snap-{snapshot_id:08d}.json"
@@ -511,20 +505,14 @@ class IceboxTable:
         new snapshot, zero data movement — like rollback/split it needs
         no exactly-once tag and is safe to re-run after a crash."""
         new_id = max(int(k) for k in self.manifest["schemas"]) + 1
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
+        return self._publish({
             "schemas": {
                 **self.manifest["schemas"],
                 str(new_id): StructType(new_fields).json(),
             },
             "current_schema_id": new_id,
             "summary": summary,
-        }
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        })
 
     def rename_column(self, old: str, new: str) -> "IceboxTable":
         """Rename a column WITHOUT rewriting any data file (Iceberg
@@ -1015,21 +1003,7 @@ class IceboxTable:
             }
         touched_strs = {str(b) for b in touched_buckets}
 
-        lineage_rel = None
-        if lineage is not None:
-            if isinstance(lineage, DataFrame):
-                lineage = [tuple(r) for r in lineage.collect()]
-            # lineage lives OUTSIDE the per-snapshot data dirs (under the
-            # always-referenced data/lineage/): lineage_paths is cumulative,
-            # so co-locating it with snapshot data would pin every
-            # historical snapshot dir forever and expire_snapshots could
-            # never reclaim superseded bucket data
-            lineage_rel = os.path.join("data", "lineage", snap_dirname)
-            _write_lineage_local(os.path.join(self.root, lineage_rel), lineage)
-
-        tbl, retries = self, retry_on_conflict
-        while True:
-            base = tbl.manifest
+        def fields(base: dict) -> dict:
             new_buckets = dict(base["buckets"])
             for b in touched_buckets:
                 if b in written:
@@ -1068,33 +1042,16 @@ class IceboxTable:
                             else:
                                 nd.pop(stat)
                     new_deltas.append(nd)
-
-            manifest = {
-                **base,
-                "snapshot_id": tbl.snapshot_id + 1,
-                "parent_id": tbl.snapshot_id,
-                "tag": tag,
-                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
+            return {
                 "buckets": new_buckets,
                 "deltas": new_deltas,
-                "lineage_paths": list(base["lineage_paths"])
-                + ([lineage_rel] if lineage_rel else []),
                 "summary": summary or {},
             }
-            try:
-                tbl._check_current()
-                tbl._write_manifest(manifest)
-                return IceboxTable(self.spark, self.root, manifest)
-            except ConcurrentCommitError:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                fresh = self._rebase_for_retry(
-                    tbl.manifest, tag, touched_buckets=touched_buckets
-                )
-                if fresh is None:  # our tag won via the other writer
-                    return IceboxTable.load(self.spark, self.root)
-                tbl = fresh
+
+        return self._publish(
+            fields, tag=tag, lineage=lineage, data_rel=snap_rel,
+            retry_on_conflict=retry_on_conflict, touched_buckets=touched_buckets,
+        )
 
     def stage_delta(self, deltas: DataFrame, extra_cols: list[str] | None = None) -> str:
         """Write a delta file set for the NEXT snapshot WITHOUT committing;
@@ -1173,7 +1130,6 @@ class IceboxTable:
         staged files — no data is rewritten."""
         if tag is not None and self.has_tag(tag):
             return self
-        snap_dirname = os.path.basename(snap_rel)
 
         entry = {
             "path": snap_rel,
@@ -1182,68 +1138,32 @@ class IceboxTable:
             "schema_id": self.manifest["current_schema_id"],
             "bucket_rows": {str(b): int(n) for b, n in bucket_rows.items()},
         }
-        if key_bounds:
+        # zone maps (col_bounds) are {field_id: [lo, hi]} over the WHOLE
+        # delta commit (entry granularity — its files span buckets).
+        # JSON-safe scalars only; anything else is dropped, pruning degrades.
+        for stat, bounds in (("key_bounds", key_bounds), ("col_bounds", col_bounds)):
             safe = {
-                str(b): [lo, hi]
-                for b, (lo, hi) in key_bounds.items()
+                str(k): [lo, hi]
+                for k, (lo, hi) in (bounds or {}).items()
                 if isinstance(lo, (str, int, float))
                 and isinstance(hi, (str, int, float))
                 and not isinstance(lo, bool)
                 and not isinstance(hi, bool)
             }
             if safe:
-                entry["key_bounds"] = safe
+                entry[stat] = safe
         if key_blooms:
             entry["key_blooms"] = {
                 str(b): v for b, v in key_blooms.items() if isinstance(v, str)
             }
-        if col_bounds:
-            # zone maps: {field_id: [lo, hi]} over the WHOLE delta commit
-            # (entry granularity — its files span buckets). JSON-safe
-            # scalars only; anything else is dropped, pruning degrades.
-            safe = {
-                str(k): [lo, hi]
-                for k, (lo, hi) in col_bounds.items()
-                if isinstance(lo, (str, int, float))
-                and isinstance(hi, (str, int, float))
-                and not isinstance(lo, bool)
-                and not isinstance(hi, bool)
-            }
-            if safe:
-                entry["col_bounds"] = safe
-        lineage_rel = None
-        if lineage is not None:
-            if isinstance(lineage, DataFrame):
-                lineage = [tuple(r) for r in lineage.collect()]
-            lineage_rel = os.path.join("data", "lineage", snap_dirname)
-            _write_lineage_local(os.path.join(self.root, lineage_rel), lineage)
-
-        tbl, retries = self, retry_on_conflict
-        while True:
-            base = tbl.manifest
-            manifest = {
-                **base,
-                "snapshot_id": tbl.snapshot_id + 1,
-                "parent_id": tbl.snapshot_id,
-                "tag": tag,
-                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
+        return self._publish(
+            lambda base: {
                 "deltas": list(base.get("deltas") or []) + [entry],
-                "lineage_paths": list(base["lineage_paths"])
-                + ([lineage_rel] if lineage_rel else []),
                 "summary": summary or {},
-            }
-            try:
-                tbl._check_current()
-                tbl._write_manifest(manifest)
-                return IceboxTable(self.spark, self.root, manifest)
-            except ConcurrentCommitError:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                fresh = self._rebase_for_retry(tbl.manifest, tag)
-                if fresh is None:  # our tag won via the other writer
-                    return IceboxTable.load(self.spark, self.root)
-                tbl = fresh
+            },
+            tag=tag, lineage=lineage, data_rel=snap_rel,
+            retry_on_conflict=retry_on_conflict,
+        )
 
     def commit_delta(
         self,
@@ -1516,11 +1436,7 @@ class IceboxTable:
         meta_dir = os.path.join(self.root, "metadata")
         with open(os.path.join(meta_dir, f"snap-{snapshot_id:08d}.json")) as f:
             old = json.load(f)
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
+        return self._publish({
             "buckets": old["buckets"],
             "deltas": old.get("deltas") or [],
             # layout travels WITH the state: rolling back across a
@@ -1531,9 +1447,7 @@ class IceboxTable:
             "current_schema_id": old["current_schema_id"],
             "schemas": old["schemas"],
             "summary": {"operation": "rollback", "to": snapshot_id},
-        }
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        })
 
     def changes(
         self,
@@ -2128,21 +2042,14 @@ class IceboxTable:
             new_buckets[b] = e
         if not changed:
             return self
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
+        return self._publish({
             "buckets": new_buckets,
             "deltas": new_deltas,
             # bucket_ids: [] — metadata-only, touches no buckets, so a
             # concurrent rewrite's retry_on_conflict rebase can prove
             # disjointness instead of failing
             "summary": {"operation": "analyze", "bucket_ids": []},
-        }
-        self._check_current()
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        })
 
     def compact_lineage(
         self, max_paths: int = 64, retention_batches: int | None = None
@@ -2217,11 +2124,7 @@ class IceboxTable:
         pq.write_table(
             merged, os.path.join(self.root, rel, "lineage.parquet")
         )
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
+        return self._publish({
             "lineage_paths": (
                 keep + [rel] if fold is tail else [rel] + keep
             ),
@@ -2230,10 +2133,7 @@ class IceboxTable:
                 "folded": len(fold),
                 "bucket_ids": [],
             },
-        }
-        self._check_current()
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        })
 
     def expire_snapshots(
         self, keep_last: int = 5, older_than: float | None = None,
@@ -2380,6 +2280,71 @@ class IceboxTable:
             merged, list(range(self.n_buckets)), tag=tag, summary={"operation": "overwrite"}
         )
 
+    def _publish(
+        self,
+        fields,
+        tag: str | None = None,
+        lineage: "DataFrame | list[tuple] | None" = None,
+        data_rel: str | None = None,
+        retry_on_conflict: int = 0,
+        touched_buckets: "list[int] | None" = None,
+    ) -> "IceboxTable":
+        """The table's one write path (Iceberg's SnapshotProducer.commit):
+        every snapshot — create, merge, compaction, DDL, rollback,
+        analyze, lineage fold — is published here. Returns the table at
+        the new snapshot.
+
+        `fields` holds the manifest keys the operation changes, or a
+        function of the parent manifest returning them (a rebase
+        recomputes them over the winner's manifest). On top of those the
+        snapshot is numbered parent + 1, `tag` joins committed_tags, and
+        `lineage` rows land once, before the first attempt, in
+        data/lineage/<basename of data_rel> — outside the per-snapshot
+        data dirs, because lineage_paths is cumulative and co-locating it
+        with snapshot data would pin every historical snapshot dir
+        forever, so expire_snapshots could never reclaim superseded
+        bucket data.
+
+        Single winner: _check_current fails fast, and the exclusive
+        manifest link in _write_manifest arbitrates a true race. A loser
+        rebases up to `retry_on_conflict` times (_rebase_for_retry, which
+        checks `touched_buckets` for disjointness when given) and
+        re-publishes on the winner's manifest; if the winner already
+        committed `tag`, the loser returns the winner's table."""
+        lineage_rel = None
+        if lineage is not None:
+            if isinstance(lineage, DataFrame):
+                lineage = [tuple(r) for r in lineage.collect()]
+            lineage_rel = os.path.join("data", "lineage", os.path.basename(data_rel))
+            _write_lineage_local(os.path.join(self.root, lineage_rel), lineage)
+        tbl, retries = self, retry_on_conflict
+        while True:
+            base = tbl.manifest
+            parent = base["snapshot_id"]  # None only for create()'s empty parent
+            manifest = {
+                **base,
+                **(fields(base) if callable(fields) else fields),
+                "snapshot_id": 0 if parent is None else parent + 1,
+                "parent_id": parent,
+                "tag": tag,
+                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
+            }
+            if lineage_rel:
+                manifest["lineage_paths"] = [*manifest["lineage_paths"], lineage_rel]
+            try:
+                if parent is not None:
+                    tbl._check_current()
+                tbl._write_manifest(manifest)
+                return IceboxTable(self.spark, self.root, manifest)
+            except ConcurrentCommitError:
+                if retries <= 0:
+                    raise
+                retries -= 1
+                fresh = self._rebase_for_retry(tbl.manifest, tag, touched_buckets)
+                if fresh is None:  # our tag won via the other writer
+                    return IceboxTable.load(self.spark, self.root)
+                tbl = fresh
+
     def _rebase_for_retry(
         self,
         stale_manifest: dict,
@@ -2517,12 +2482,7 @@ class IceboxTable:
         # or an object store with close-to-durable semantics (S3 et al.,
         # the deployment target this layout models).
         _fsync_dir(meta_dir)
-        cur_tmp = os.path.join(meta_dir, f"CURRENT.tmp-{uuid.uuid4().hex[:8]}")
-        with open(cur_tmp, "w") as f:
-            f.write(name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(cur_tmp, os.path.join(meta_dir, "CURRENT"))
+        _swap_current(meta_dir, name)
         _fsync_dir(meta_dir)
         self.manifest = manifest
 
@@ -2567,6 +2527,17 @@ def _rebase_schemas(stale: dict, fresh: dict) -> tuple[dict, int]:
         )
     cur = s_cur if s_new else (f_cur if f_new else max(s_cur, f_cur))
     return merged, cur
+
+
+def _swap_current(meta_dir: str, name: str) -> None:
+    """Point CURRENT at snapshot file `name`: fsync'd temp file, then an
+    atomic rename over CURRENT."""
+    cur_tmp = os.path.join(meta_dir, f"CURRENT.tmp-{uuid.uuid4().hex[:8]}")
+    with open(cur_tmp, "w") as f:
+        f.write(name)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(cur_tmp, os.path.join(meta_dir, "CURRENT"))
 
 
 def _fsync_dir(path: str) -> None:

@@ -28,6 +28,10 @@ import struct
 import numpy as np
 
 _HEADERS = (b"GIF87a", b"GIF89a")
+# decode_frames renders onto a full logical-screen canvas, whose size an
+# untrusted 13-byte header chooses (up to 65535 x 65535, ~12.9 GB as RGB):
+# refuse anything over 4096 x 4096 pixels (48 MB) before allocating
+MAX_CANVAS_PIXELS = 1 << 24
 
 
 def is_gif(buf: bytes) -> bool:
@@ -222,8 +226,13 @@ def _deinterlace(rows: np.ndarray) -> np.ndarray:
 
 def decode_frames(buf: bytes) -> tuple[list[np.ndarray], list[int]]:
     """Full render: (frames as (H, W, 3) uint8 composited per the GIF
-    disposal model, per-frame delays in centiseconds)."""
+    disposal model, per-frame delays in centiseconds). Raises
+    ValueError for a logical screen over MAX_CANVAS_PIXELS."""
     w, h, gct_off, gct_size, pos = _screen(buf)
+    if w * h > MAX_CANVAS_PIXELS:
+        raise ValueError(
+            f"corrupt GIF: {w}x{h} canvas exceeds {MAX_CANVAS_PIXELS} pixels"
+        )
     gct = (
         np.frombuffer(buf[gct_off : gct_off + 3 * gct_size], np.uint8).reshape(
             -1, 3

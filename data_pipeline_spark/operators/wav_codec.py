@@ -260,9 +260,9 @@ def _pcm16_bytes(samples: list[int]) -> bytes:
 
 def frame_bytes(buf: bytes, i: int) -> bytes:
     """Bytes of frame i (all channels) — frame_sample's per-frame
-    payload. PCM frames are O(1) raw slices; compressed formats (G.711,
-    ADPCM) come back EXPANDED to PCM16 so frame payloads are uniform
-    little-endian int16 regardless of the container's encoding. For
+    payload. PCM frames are O(1) raw slices that keep the file's native
+    sample width (8, 16, 24 or 32 bits); compressed formats (G.711,
+    ADPCM) come back EXPANDED to little-endian PCM16. For
     many frames of one ADPCM payload use frames_pcm16 — this per-frame
     form decodes the file each call."""
     tag, ch, _rate, bits, block, spb, data_len = _parse_fmt(buf)

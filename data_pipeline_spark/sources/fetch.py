@@ -18,8 +18,11 @@ Design for a 1000-executor fetch of millions of URLs:
   per-URL jitter handle transient failures; the caller routes rows
   with `content IS NULL` to a DLQ table, exactly like cdc/apply's
   quarantine path.
-* Bounded memory: `max_bytes` caps each payload at read time (an
-  over-limit body is an error row, not an OOM); payloads land as a
+* Untrusted URLs: only http and https are fetched; any other scheme
+  (file://, ftp://) is an error row with status 0, and no request goes
+  out.
+* Bounded memory: `max_bytes` (default 20 MB) caps each payload at read
+  time (an over-limit body is an error row, not an OOM); payloads land as a
   `binary` column sized for the 20 MB Arrow batch discipline the
   multimodal stages already follow.
 * Reproducibility: sha256 per payload so a re-fetch (or a mirror) can
@@ -34,11 +37,19 @@ from __future__ import annotations
 import hashlib
 import time
 import urllib.error
+import urllib.parse
 import urllib.request
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+# the payload cap when the caller sets none: one fetched body must fit the
+# 20 MB Arrow-batch bound the module docstring promises
+DEFAULT_MAX_BYTES = 20 * 1024 * 1024
+# file://, ftp:// and the like would read local files or leave the
+# response status unset — only web schemes are fetched
+_SCHEMES = ("http", "https")
 
 FETCH_SCHEMA = (
     "url string, status int, content binary, n_bytes long, "
@@ -54,6 +65,12 @@ def _fetch_one(
     max_bytes: int | None,
 ) -> tuple[int, bytes | None, str | None, int]:
     """(status, content, error, n_attempts). Never raises."""
+    try:
+        scheme = urllib.parse.urlsplit(url).scheme.lower()
+    except ValueError as exc:
+        return 0, None, f"bad URL: {exc}", 1
+    if scheme not in _SCHEMES:
+        return 0, None, f"bad URL: scheme {scheme!r} not in {_SCHEMES}", 1
     attempt = 0
     last_err = "no attempts made"
     status = 0
@@ -110,7 +127,7 @@ def fetch_urls(
     timeout: float = 10.0,
     retries: int = 2,
     backoff: float = 0.2,
-    max_bytes: int | None = None,
+    max_bytes: int | None = DEFAULT_MAX_BYTES,
     min_interval: float = 0.0,
 ) -> DataFrame:
     """URL rows -> (url, status, content, n_bytes, sha256, error,
@@ -134,7 +151,9 @@ def fetch_urls(
                     str(url), timeout, retries, backoff, max_bytes
                 )
                 rows["url"].append(url)
-                rows["status"].append(status)
+                # a response without a status (non-HTTP handlers) must
+                # not break the int32 cast below — it is status 0
+                rows["status"].append(status or 0)
                 rows["content"].append(body)
                 rows["n_bytes"].append(-1 if body is None else len(body))
                 rows["sha256"].append(

@@ -33,10 +33,10 @@ BASE_SCHEMA = StructType(
 PAYLOAD = ["doc_id", "tokens", "n_tok", "source"]
 
 
-def _engine_final(spark, tdir, log_df, n_buckets=8, n_salts=4):
+def _engine_final(spark, tdir, log_df, n_buckets=8):
     root = os.path.join(tdir, "table")
     t = IceboxTable.create(spark, root, BASE_SCHEMA, n_buckets=n_buckets)
-    t = replay_log(t, log_df, n_salts=n_salts)
+    t = replay_log(t, log_df)
     return t
 
 
@@ -66,7 +66,7 @@ def test_replay_matches_oracle_skewed(spark, tdir):
     log = gen_event_log(
         spark, n_events=2000, n_docs=200, batch_size=1000, hot_frac=0.5, partitions=4,
     )
-    t = _check(spark, tdir, log, n_salts=8)
+    t = _check(spark, tdir, log)
     # the hot key must have exactly one surviving row (or none if deleted)
     hot = t.read().filter(F.col("doc_id") == "doc_00000000").count()
     assert hot in (0, 1)
@@ -94,13 +94,6 @@ def test_lineage_counters(spark, tdir):
     # upserts never exceed events
     assert (lin["rows_upserted"] <= lin["events_applied"]).all()
     assert set(lin["batch_id"]) == {0, 1, 2, 3}
-
-
-def test_salted_and_unsalted_agree(spark, tdir):
-    log = gen_event_log(spark, n_events=800, n_docs=50, batch_size=800, hot_frac=0.3, partitions=4)
-    t1 = _engine_final(spark, os.path.join(tdir, "a"), log, n_salts=1)
-    t2 = _engine_final(spark, os.path.join(tdir, "b"), log, n_salts=16)
-    assert_tables_equal(t1.read().toPandas(), t2.read().toPandas())
 
 
 def test_generator_scales_to_design_magnitude(spark):

@@ -23,7 +23,7 @@ def _replayed(spark, tdir, n_events=1500, n_docs=200, merge_strategy="delta"):
     t = IceboxTable.create(
         spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=8
     )
-    t = replay_log(t, log, n_salts=4, merge_strategy=merge_strategy)
+    t = replay_log(t, log, merge_strategy=merge_strategy)
     return t, replay_oracle(log.toPandas(), PAYLOAD)
 
 

@@ -13,7 +13,7 @@ import threading
 import numpy as np
 import pytest
 
-from data_pipeline_spark.sources.fetch import fetch_urls
+from data_pipeline_spark.sources.fetch import DEFAULT_MAX_BYTES, fetch_urls
 
 _MEDIA: dict[str, bytes] = {}
 
@@ -33,6 +33,12 @@ class _Handler(http.server.BaseHTTPRequestHandler):
             self.wfile.write(body)
         elif self.path == "/big":
             body = b"x" * 10_000
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+        elif self.path == "/huge":
+            body = b"x" * (DEFAULT_MAX_BYTES + 1)
             self.send_response(200)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
@@ -147,3 +153,20 @@ def test_fetch_malformed_url_skips_retry_budget(spark):
     row = fetch_urls(df, retries=3, backoff=5.0).collect()[0]
     assert row["content"] is None and "bad URL" in row["error"]
     assert row["n_attempts"] == 1  # backoff=5s x3 would be obvious
+
+
+def test_fetch_refuses_local_files_and_caps_by_default(spark, server, tmp_path):
+    """A file:// row is an error row with status 0 — no local bytes leak
+    into the table and the int32 status cast survives — and with no
+    max_bytes given, a body one byte over the 20 MB default is refused."""
+    local = tmp_path / "secret.txt"
+    local.write_bytes(b"local bytes")
+    rows = [(local.as_uri(),), (f"{server}/huge",)]
+    df = spark.createDataFrame(rows, "url string")
+    out = {r["url"]: r for r in fetch_urls(df, retries=2, backoff=5.0).collect()}
+    f = out[local.as_uri()]
+    assert f["status"] == 0 and f["content"] is None
+    assert "scheme" in f["error"] and f["n_attempts"] == 1
+    huge = out[f"{server}/huge"]
+    assert huge["status"] == 200 and huge["content"] is None
+    assert "max_bytes" in huge["error"] and huge["n_bytes"] == -1

@@ -234,6 +234,14 @@ def test_corrupt_gifs_are_loud():
     good = gc.encode([_img(8, 8)])
     with pytest.raises(ValueError):
         gc.decode_frames(good[: len(good) // 2])
+    # a 29-byte file claiming a 65535x65535 screen: refused before the
+    # ~12.9 GB canvas is allocated
+    huge = (
+        b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0, 0, 0)
+        + b"\x2c" + struct.pack("<HHHH", 0, 0, 1, 1) + b"\x00\x02\x02\x4c\x01\x00\x3b"
+    )
+    with pytest.raises(ValueError, match="canvas exceeds"):
+        gc.decode_frames(huge)
 
 
 def test_multimodal_stages_on_real_gif(spark):

@@ -48,12 +48,10 @@ def test_delta_replay_equals_cow_replay(spark, tdir):
     t_cow = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "cow"), BASE_SCHEMA, n_buckets=8),
         log,
-        n_salts=4,
     )
     t_mor = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "mor"), BASE_SCHEMA, n_buckets=8),
         log,
-        n_salts=4,
         merge_strategy="delta",
     )
     assert_tables_equal(
@@ -80,13 +78,13 @@ def test_delta_write_amplification_is_batch_sized(spark, tdir):
                         partitions=4)
     t = IceboxTable.create(spark, os.path.join(tdir, "t"), BASE_SCHEMA,
                            n_buckets=8)
-    t = apply_batch(t, seed, "seed", n_salts=4, merge_strategy="delta")
+    t = apply_batch(t, seed, "seed", merge_strategy="delta")
     assert t.read().count() > 1500  # standing table >> every later batch
     per_commit = []
     prev = _delta_rows(t)
     for b in range(4):
         t = apply_batch(
-            t, inc.filter(F.col("batch_id") == b), f"inc{b}", n_salts=4,
+            t, inc.filter(F.col("batch_id") == b), f"inc{b}",
             merge_strategy="delta",
         )
         now = _delta_rows(t)
@@ -105,7 +103,7 @@ def test_compaction_bounds_files_and_preserves_reads(spark, tdir):
     max_files = 0
     for b in range(20):
         t = apply_batch(
-            t, log.filter(F.col("batch_id") == b), b, n_salts=4, merge_strategy="delta"
+            t, log.filter(F.col("batch_id") == b), b, merge_strategy="delta"
         )
         if b % 5 == 4:
             before = t.read().orderBy("doc_id").toPandas()
@@ -120,7 +118,6 @@ def test_compaction_bounds_files_and_preserves_reads(spark, tdir):
     t_cow = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "cow"), BASE_SCHEMA, n_buckets=4),
         log,
-        n_salts=4,
     )
     assert_tables_equal(
         t_cow.read().select(*PAYLOAD).toPandas(),
@@ -167,7 +164,6 @@ def test_expire_reclaims_space_for_cdc_tables(spark, tdir):
     t = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=4),
         log,
-        n_salts=4,
     )
     before = t.read().orderBy("doc_id").toPandas()
     res = t.expire_snapshots(keep_last=2)

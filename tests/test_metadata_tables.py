@@ -23,7 +23,7 @@ def _mk(spark, tdir, merge_strategy="delta"):
     t = IceboxTable.create(
         spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=4
     )
-    return replay_log(t, log, n_salts=4, merge_strategy=merge_strategy)
+    return replay_log(t, log, merge_strategy=merge_strategy)
 
 
 def test_snapshots_table_shape_and_lineage(spark, tdir):
@@ -153,7 +153,7 @@ def test_compact_lineage_bounds_manifest_and_reclaims(spark, tdir):
         .withColumn("batch_id", F.col("batch_id") + 3)
     )
     from data_pipeline_spark.cdc import replay_log as _rl
-    t = _rl(t, log2, n_salts=4, merge_strategy="delta")
+    t = _rl(t, log2, merge_strategy="delta")
     t = t.compact_lineage(max_paths=2)
     ps = t.manifest["lineage_paths"]
     assert ps[0] == seg0 and len(ps) == 2  # old segment untouched

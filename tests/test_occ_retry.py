@@ -249,3 +249,67 @@ def test_delta_retry_matches_sequential_oracle(spark, tdir):
                     retry_on_conflict=len(batches))
     tr = IceboxTable.load(spark, root_r)
     assert_tables_equal(tr.read().toPandas(), ts.read().toPandas())
+
+
+def _stage_one(spark, t):
+    rows = spark.createDataFrame([("z", [9], 1, "s")], BASE_SCHEMA)
+    staged = t.stage_delta(
+        rows.withColumn("_b", t.bucket_of())
+        .withColumn("_lsn", F.lit(999).cast("long"))
+        .withColumn("_tombstone", F.lit(False))
+    )
+    return t.commit_staged_delta(staged, {0: 1}, tag="stale")
+
+
+def _rewrite_all(spark, t):
+    rows = spark.createDataFrame([("z", [9], 1, "s")], BASE_SCHEMA)
+    return t.commit_rewrite(
+        rows.withColumn("_b", t.bucket_of()), list(range(N_BUCKETS))
+    )
+
+
+STALE_OPS = {
+    "commit_staged_delta": _stage_one,
+    "commit_rewrite": _rewrite_all,
+    "rename_column": lambda spark, t: t.rename_column("source", "src"),
+    "drop_column": lambda spark, t: t.drop_column("source"),
+    "rollback": lambda spark, t: t.rollback(0),
+    "analyze": lambda spark, t: t.analyze(),
+    "compact_lineage": lambda spark, t: t.compact_lineage(max_paths=1),
+}
+
+
+@pytest.mark.parametrize("op", sorted(STALE_OPS))
+def test_stale_handle_loses_every_snapshot_op(spark, tdir, op):
+    """Every snapshot-producing op goes through the one publish path, so
+    each refuses from a stale handle the same way: ConcurrentCommitError,
+    CURRENT and the manifest chain untouched, and a reload sees the
+    winner. The table carries two unanalyzed delta commits with lineage,
+    so analyze and compact_lineage(max_paths=1) have work to publish."""
+    root = os.path.join(tdir, "t")
+    t = IceboxTable.create(spark, root, BASE_SCHEMA, n_buckets=N_BUCKETS)
+    for i in range(2):
+        t = apply_batch(t, _batch(spark, 10 * i, [(f"d{i}", [i], 1, "s")]), i,
+                        merge_strategy="delta")
+    assert all(d.get("col_bounds") is None for d in t.manifest["deltas"])
+    stale = IceboxTable.load(spark, root)
+    winner = apply_batch(IceboxTable.load(spark, root),
+                         _batch(spark, 100, [("w", [7], 1, "s")]), "win",
+                         merge_strategy="delta")
+    meta = os.path.join(root, "metadata")
+
+    def chain():
+        with open(os.path.join(meta, "CURRENT")) as f:
+            return f.read(), sorted(
+                n for n in os.listdir(meta)
+                if n.startswith("snap-") and n.endswith(".json")
+            )
+
+    before = chain()
+    with pytest.raises(ConcurrentCommitError):
+        STALE_OPS[op](spark, stale)
+    assert chain() == before
+    fresh = IceboxTable.load(spark, root)
+    assert fresh.snapshot_id == winner.snapshot_id
+    assert fresh.manifest["committed_tags"] == winner.manifest["committed_tags"]
+    assert set(_state(fresh)) == {"d0", "d1", "w"}

@@ -2,8 +2,7 @@
 including duplicate LSNs (redelivery), delete-before-insert, empty
 batches, all-delete batches, arbitrary batch boundaries — must replay
 to exactly the pandas oracle's state, under all three merge strategies
-(broadcast copy-on-write, shuffle, merge-on-read delta) and both dedup
-strategies (hash-agg max_by, salted window).
+(broadcast copy-on-write, shuffle, merge-on-read delta).
 
 The reference has no property tests at all (footprint-res/package.json:6
 is a no-op test script); this suite is the engine's upgrade of its
@@ -79,10 +78,9 @@ def _dedupe_ties(rows):
     events=log_st,
     splits=splits_st,
     strategy=st.sampled_from(["join", "shuffle", "delta"]),
-    dedup=st.sampled_from(["agg", "window"]),
 )
 def test_any_log_any_batching_matches_oracle(
-    spark, tmp_path_factory, events, splits, strategy, dedup
+    spark, tmp_path_factory, events, splits, strategy
 ):
     rows = _dedupe_ties(_to_rows(events))
     tdir = str(tmp_path_factory.mktemp("prop"))
@@ -116,9 +114,7 @@ def test_any_log_any_batching_matches_oracle(
             batch = spark.createDataFrame([], schema)
         else:
             batch = df_all.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        t = apply_batch(
-            t, batch, b, n_salts=2, merge_strategy=strategy, dedup_strategy=dedup
-        )
+        t = apply_batch(t, batch, b, merge_strategy=strategy)
         lo = hi
 
     import pandas as pd
@@ -186,7 +182,7 @@ def test_maintenance_ops_preserve_replay_state(
             batch = spark.createDataFrame([], schema)
         else:
             batch = df_all.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        t = apply_batch(t, batch, b, n_salts=2, merge_strategy="delta")
+        t = apply_batch(t, batch, b, merge_strategy="delta")
         op = maintenance[b % len(maintenance)]
         if op == "compact":
             t = t.compact_if_needed(ratio=0.0)
@@ -260,7 +256,7 @@ def test_keyed_lookup_equals_filtered_read_any_history(
             batch = spark.createDataFrame([], schema)
         else:
             batch = df_all.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        t = apply_batch(t, batch, b, n_salts=2, merge_strategy="delta")
+        t = apply_batch(t, batch, b, merge_strategy="delta")
         op = maintenance[b % len(maintenance)]
         if op == "compact":
             t = t.compact_if_needed(ratio=0.0)

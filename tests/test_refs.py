@@ -24,7 +24,7 @@ def _mk(spark, tdir, n_events=900, n_docs=120):
     t = IceboxTable.create(
         spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=4
     )
-    return replay_log(t, log, n_salts=4, merge_strategy="delta")
+    return replay_log(t, log, merge_strategy="delta")
 
 
 def test_ref_pins_snapshot_across_commits(spark, tdir):

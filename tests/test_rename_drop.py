@@ -26,7 +26,7 @@ def _mk(spark, tdir, merge_strategy="delta", n_events=600, n_docs=80):
     t = IceboxTable.create(
         spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=4
     )
-    return replay_log(t, log, n_salts=4, merge_strategy=merge_strategy)
+    return replay_log(t, log, merge_strategy=merge_strategy)
 
 
 def test_rename_travels_values_without_rewrite(spark, tdir):

@@ -24,7 +24,7 @@ def test_hot_key_correctness(spark, tdir):
     assert hot_count > 1500  # skew actually generated
 
     t = IceboxTable.create(spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=8)
-    t = apply_batch(t, log, 0, n_salts=8)
+    t = apply_batch(t, log, 0)
     got = t.read().toPandas()
     expected = replay_oracle(log.toPandas(), PAYLOAD)
     assert_tables_equal(got[list(expected.columns)], expected)
