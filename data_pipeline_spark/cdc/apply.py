@@ -60,20 +60,26 @@ Scale design (what survives a 1000-executor / 100 TB target):
     reference reading one cty= prefix,
     /root/reference/citygml/build-citygml.sh:37); no job ever scans the
     full table for bookkeeping;
-  * per batch: the CoW paths run ONE stats+dedup job over the raw
-    events (stats fold into the dedup aggregate, _dedup_with_stats) and
-    ONE merge/write job; the delta path is FUSED further
-    (_apply_delta_fused): one heavy scan→dedup→sorted-write job
-    (per-winner stats ride along as hidden parquet columns) plus one
-    tiny per-bucket rollup over the written compact file — no persist of
-    the batch, exactly one pass over raw events. Driver work is
-    O(#touched buckets) — one small collect, one O(buckets) manifest
-    write — never O(#events).
+  * per batch, the delta path (_apply_delta_fused) runs 4 Spark jobs
+    (cdc.apply.jobs_per_batch in the traced benchmark; adaptive
+    execution runs each exchange's map side as a job of its own): the
+    heavy scan→dedup→sorted-write (2 jobs; per-winner stats ride along
+    as hidden parquet columns) and the tiny per-bucket rollup over the
+    written compact file (2 jobs) — no persist of the batch, exactly
+    one pass over raw events. The CoW paths fold the same stats into
+    the dedup aggregate (_dedup_with_stats), persist its winners for
+    the same rollup, then run the merge+write plan. Every engine shares
+    one batch tail (_bucket_rollup → _commit_batch) and one schema
+    rollback guard (_schema_rollback). Driver work is O(#touched
+    buckets) — one small collect, one O(buckets) manifest write —
+    never O(#events).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
@@ -249,8 +255,6 @@ def _quarantine_split(
     per-batch OVERWRITE makes crash-replays idempotent on the DLQ (both
     reason families share the one write, so a batch with both kinds of
     bad rows still lands exactly one DLQ dir)."""
-    import os
-
     bad_pred = _bad_event_pred(key)
     viols = _expectation_preds(expectations)
     drop_pred = bad_pred
@@ -278,6 +282,111 @@ def _quarantine_split(
         .parquet(os.path.join(quarantine_dir, f"batch_id={batch_id}"))
     )
     return ev.filter(~drop_pred)
+
+
+@contextmanager
+def _schema_rollback(table: IceboxTable):
+    """The one schema-rollback guard of every merge engine.
+
+    normalize_events evolves the handle's schema in memory (added
+    columns, widened types); only the batch's commit persists it.
+    apply_batch and _apply_columnar run everything from normalize_events
+    to the publish inside this guard, so ANY failed apply — malformed
+    rows, expectation violations, a quarantine-write error, an
+    out-of-order refusal, ConcurrentCommitError on any plan — leaves the
+    handle's schema as it was before the batch."""
+    saved_id = table.manifest["current_schema_id"]
+    saved = dict(table.manifest["schemas"])
+    try:
+        yield
+    except Exception:
+        table.manifest["current_schema_id"] = saved_id
+        table.manifest["schemas"] = saved
+        raise
+
+
+def _bucket_rollup(df: DataFrame, key: str, dead, key_stats: bool = False) -> list:
+    """The per-bucket rollup of a folded batch (one row per key carrying
+    _b, _n_ev, _wm, _bad; `dead` marks a delete winner) — one small
+    collect, O(#touched buckets) rows: events applied, LSN watermark and
+    its minimum, malformed count, winners (n) and deletes (n_dels).
+
+    key_stats adds the per-bucket key bounds and key bloom that delta
+    commits record as manifest file statistics (keyed reads skip a delta
+    when no probe fits the range or the key set); copy-on-write commits
+    record neither, so they do not pay for the 32 bloom aggregates."""
+    aggs = [
+        F.sum("_n_ev").alias("events_applied"),
+        F.max("_wm").alias("lsn_watermark"),
+        F.min("_wm").alias("_wm_min"),
+        F.sum("_bad").alias("bad_events"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dead.cast("long")).alias("n_dels"),
+    ]
+    if key_stats:
+        df = key_bloom_prep(df, key)
+        aggs += [F.min(key).alias("_kmin"), F.max(key).alias("_kmax"),
+                 *key_bloom_agg_exprs()]
+    return df.groupBy("_b").agg(*aggs).collect()
+
+
+def _delta_file_stats(stats: list) -> dict:
+    """bucket_rows, key_bounds and key_blooms of a delta commit, from a
+    key_stats rollup."""
+    return {
+        "bucket_rows": {int(r["_b"]): int(r["n"]) for r in stats},
+        "key_bounds": {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats},
+        "key_blooms": pack_key_blooms(stats),
+    }
+
+
+def _commit_batch(table, stats, batch_id, tag, retry_on_conflict, publish, **summary):
+    """The batch tail every merge engine shares after its rollup: refuse
+    a batch holding malformed events, commit an empty batch as an empty
+    tagged snapshot, else build the lineage (one row per bucket: batch
+    id, bucket, events, upserts, deletes, watermark) and the summary
+    (`summary` holds the engine's own fields) and return
+    `publish(touched, kw)` — the engine plans its merge over the sorted
+    touched buckets and commits with `kw` (tag, lineage, summary,
+    retry_on_conflict)."""
+    bad = sum(r["bad_events"] or 0 for r in stats)
+    if bad:
+        raise ValueError(
+            f"batch {batch_id}: {bad} events with unknown op, null lsn, "
+            f"or null {table.key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
+        )
+    touched = sorted(int(r["_b"]) for r in stats if r["n"])
+    if not touched:
+        return table.commit_rewrite(
+            table.spark.createDataFrame([], _merged_schema(table)),
+            [],
+            tag=tag,
+            summary={"operation": "merge", "events": 0},
+            retry_on_conflict=retry_on_conflict,
+        )
+    bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
+    lineage = [
+        (
+            bid,
+            int(r["_b"]),
+            int(r["events_applied"]),
+            int(r["n"]) - int(r["n_dels"] or 0),
+            int(r["n_dels"] or 0),
+            int(r["lsn_watermark"]),
+        )
+        for r in stats
+    ]
+    summary = {
+        "operation": "merge",
+        **summary,
+        "touched_buckets": len(touched),
+        # ids let changes() bucket-prune across commits and let
+        # concurrent rewrites prove bucket-disjointness when rebasing
+        "bucket_ids": touched,
+        "winners": sum(int(r["n"]) for r in stats),
+    }
+    return publish(touched, {"tag": tag, "lineage": lineage, "summary": summary,
+                             "retry_on_conflict": retry_on_conflict})
 
 
 def apply_batch(
@@ -343,133 +452,77 @@ def apply_batch(
     rows_deleted counts delete winners (tombstones written) — both are
     batch-intrinsic, so lineage needs no target probe.
 
-    Per-batch Spark jobs: ONE stats/dedup job over the raw events (see _dedup_with_stats) and ONE merge+write
-    job. A batch rejected for malformed events leaves no trace: the
-    schema evolution normalize_events applied in-memory is rolled back.
+    Per-batch Spark jobs (adaptive execution runs each exchange's map
+    side as a job of its own): 4 on the delta path, as the traced
+    benchmark measures (cdc.apply.jobs_per_batch) — see
+    _apply_delta_fused; the copy-on-write paths add the merge plan's
+    exchanges and broadcasts on top. A failed apply of any kind leaves
+    no trace in the handle: the schema evolution normalize_events
+    applied in memory is rolled back (_schema_rollback).
     """
     tag = f"{tag_prefix}:{batch_id}"
     if table.has_tag(tag):
         return table
 
     key = table.key
-    # snapshot the in-memory schema state so a rejected batch can roll
-    # back the evolution normalize_events performs eagerly
-    saved_schema_id = table.manifest["current_schema_id"]
-    saved_schemas = dict(table.manifest["schemas"])
-    ev = normalize_events(events, table)
-    if quarantine_dir is not None:
-        ev = _quarantine_split(ev, key, batch_id, quarantine_dir,
-                               expectations=expectations)
-    elif expectations:
-        # strict mode: violations reject the whole batch, same contract
-        # as malformed events (one aggregate job, only when declared)
-        viols = _expectation_preds(expectations)
-        row = ev.select(
-            *[F.sum(vp.cast("long")).alias(f"_x{i}")
-              for i, (_, vp) in enumerate(viols)]
-        ).first()
-        counts = {
-            name: int(row[f"_x{i}"] or 0)
-            for i, (name, _) in enumerate(viols)
-            if row[f"_x{i}"]
-        }
-        if counts:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: expectation violations {counts} — "
-                "refusing to apply (set quarantine_dir to route them to "
-                "the dead-letter queue instead)"
-            )
-    if merge_strategy == "delta":
-        # fused fast path: ONE heavy job (scan → dedup agg → sorted delta
-        # write, per-winner stats riding along as extra parquet columns),
-        # then a tiny stats job over the written compact file — no
-        # persist/cache of the batch, no second pass over raw events
-        return _apply_delta_fused(
-            table, ev, batch_id, tag, saved_schema_id, saved_schemas,
-            retry_on_conflict=retry_on_conflict,
-        )
-    winners = _dedup_with_stats(ev, key, table).persist()
-    try:
-        stats = (
-            winners.groupBy("_b")
-            .agg(
-                F.sum("_n_ev").alias("events_applied"),
-                F.max("_wm").alias("lsn_watermark"),
-                F.sum("_bad").alias("bad_events"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
-                F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
-            )
-            .collect()
-        )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: {bad} events with unknown op, null lsn, "
-                f"or null {key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
-                tag=tag,
-                summary={"operation": "merge", "events": 0},
-                retry_on_conflict=retry_on_conflict,
-            )
-        n_winners = sum(r["n"] or 0 for r in stats)
-        if merge_strategy == "auto":
-            small_batch = n_winners <= BROADCAST_ROW_LIMIT
-            vs_table = table.total_rows >= JOIN_TABLE_RATIO * n_winners
-            merge_strategy = "join" if (small_batch and vs_table) else "shuffle"
+    with _schema_rollback(table):
+        ev = normalize_events(events, table)
+        if quarantine_dir is not None:
+            ev = _quarantine_split(ev, key, batch_id, quarantine_dir,
+                                   expectations=expectations)
+        elif expectations:
+            # strict mode: violations reject the whole batch, same contract
+            # as malformed events (one aggregate job, only when declared)
+            viols = _expectation_preds(expectations)
+            row = ev.select(
+                *[F.sum(vp.cast("long")).alias(f"_x{i}")
+                  for i, (_, vp) in enumerate(viols)]
+            ).first()
+            counts = {
+                name: int(row[f"_x{i}"] or 0)
+                for i, (name, _) in enumerate(viols)
+                if row[f"_x{i}"]
+            }
+            if counts:
+                raise ValueError(
+                    f"batch {batch_id}: expectation violations {counts} — "
+                    "refusing to apply (set quarantine_dir to route them to "
+                    "the dead-letter queue instead)"
+                )
+        if merge_strategy == "delta":
+            return _apply_delta_fused(table, ev, batch_id, tag, retry_on_conflict)
+        winners = _dedup_with_stats(ev, key, table).persist()
+        try:
+            stats = _bucket_rollup(winners, key, F.col("op") == "delete")
 
-        cols = [f.name for f in table.schema.fields]
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n_ups"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
-            )
-            for r in stats
-        ]
-        summary = {
-            "operation": "merge",
-            "strategy": merge_strategy,
-            "touched_buckets": len(touched),
-            # ids let IceboxTable.changes() bucket-prune across CoW
-            # commits (a delta commit's bucket_rows already carries them)
-            "bucket_ids": sorted(touched),
-            "winners": n_winners,
-        }
+            def publish(touched, kw):
+                strategy = merge_strategy
+                if strategy == "auto":
+                    n_winners = kw["summary"]["winners"]
+                    small_batch = n_winners <= BROADCAST_ROW_LIMIT
+                    vs_table = table.total_rows >= JOIN_TABLE_RATIO * n_winners
+                    strategy = "join" if (small_batch and vs_table) else "shuffle"
+                kw["summary"]["strategy"] = strategy
+                cols = [f.name for f in table.schema.fields]
+                # target rows (incl. tombstones) of touched buckets only —
+                # the analog of the reference reading one cty= prefix,
+                # /root/reference/citygml/build-citygml.sh:37
+                target = table.read(buckets=touched, internal=True)
+                if strategy == "join":
+                    merged = _merge_join(table, target, winners, cols)
+                else:
+                    merged = _merge_shuffle(table, target, winners, cols, len(touched))
+                return table.commit_rewrite(
+                    merged,
+                    touched,
+                    repartition=False,  # both merge plans already cluster by _b
+                    collect_stats=False,  # hot per-batch path: analyze()/compaction harvest later
+                    **kw,
+                )
 
-        # target rows (incl. tombstones) of touched buckets only — the
-        # analog of the reference reading one cty= prefix,
-        # /root/reference/citygml/build-citygml.sh:37
-        target = table.read(buckets=touched, internal=True)
-        if merge_strategy == "join":
-            merged = _merge_join(table, target, winners, cols)
-        else:
-            merged = _merge_shuffle(table, target, winners, cols, len(touched))
-        return table.commit_rewrite(
-            merged,
-            touched,
-            tag=tag,
-            lineage=lineage,
-            summary=summary,
-            repartition=False,  # both merge plans already cluster by _b
-            collect_stats=False,  # hot per-batch path: analyze()/compaction harvest later
-            retry_on_conflict=retry_on_conflict,
-        )
-    finally:
-        winners.unpersist()
+            return _commit_batch(table, stats, batch_id, tag, retry_on_conflict, publish)
+        finally:
+            winners.unpersist()
 
 
 def _apply_delta_fused(
@@ -477,20 +530,22 @@ def _apply_delta_fused(
     ev: DataFrame,
     batch_id: int | str,
     tag: str,
-    saved_schema_id: int,
-    saved_schemas: dict,
     retry_on_conflict: int = 0,
 ) -> IceboxTable:
-    """Merge-on-read apply with the per-batch job count minimized:
+    """Merge-on-read apply with the per-batch job count minimized — 4
+    Spark jobs in all (cdc.apply.jobs_per_batch in the traced benchmark):
 
-      job 1 (heavy, the ONLY pass over raw events): scan → one hash
+      jobs 1-2 (heavy, the ONLY pass over raw events): scan → one hash
              aggregate (LWW winners + per-key stats, _dedup_with_stats)
-             → sorted delta-file write. Output partitioning is whatever
-             AQE coalesced the dedup exchange to (~64 MB targets), so
-             small batches land in one file without an explicit coalesce.
-      job 2 (tiny, O(winners) over ONE compact file set): per-bucket
-             rollup of the stats columns that rode along in the parquet
-             (schema-projected reads never see them) → validation,
+             → sorted delta-file write; the dedup exchange's map side and
+             the write each run as one job. Output partitioning is
+             whatever AQE coalesced the dedup exchange to (stage_delta's
+             8 MB advisory), so small batches land in one file without
+             an explicit coalesce.
+      jobs 3-4 (tiny, O(winners) over ONE compact file set): the shared
+             per-bucket rollup (_bucket_rollup, map side + collect) of the
+             stats columns that rode along in the parquet (schema-projected
+             reads never see them) → _commit_batch: validation,
              bucket_rows, lineage.
       then the metadata-only manifest publish.
 
@@ -499,11 +554,9 @@ def _apply_delta_fused(
     measured at small batch sizes) and runs no separate write job. ANY
     failure after the stage (malformed batch, executor loss during the
     stats job, ConcurrentCommitError at publish) deletes the staged dir
-    and rolls back the in-memory schema evolution — a failed apply
-    leaves no orphan data and no half-evolved handle state.
+    (apply_batch's _schema_rollback restores the schema) — a failed
+    apply leaves no orphan data and no half-evolved handle state.
     """
-    import shutil
-
     key = table.key
     cols = [f.name for f in table.schema.fields]
     winners = _dedup_with_stats(ev, key, table)
@@ -531,83 +584,26 @@ def _apply_delta_fused(
                 StructField("_bad", LongType()),
             ]
         )
-        stats = (
-            key_bloom_prep(
-                table.spark.read.schema(stats_schema).parquet(snap_abs), key
-            )
-            .groupBy("_b")
-            .agg(
-                F.sum("_n_ev").alias("events_applied"),
-                F.max("_wm").alias("lsn_watermark"),
-                F.sum("_bad").alias("bad_events"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.coalesce(F.col("_tombstone"), F.lit(False)).cast("long")
-                ).alias("n_dels"),
-                # per-bucket key bounds + key bloom → manifest file
-                # statistics: keyed reads skip this whole delta when no
-                # probe fits the range / the key set
-                F.min(key).alias("_kmin"),
-                F.max(key).alias("_kmax"),
-                *key_bloom_agg_exprs(),
-            )
-            .collect()
+        stats = _bucket_rollup(
+            table.spark.read.schema(stats_schema).parquet(snap_abs),
+            key,
+            F.coalesce(F.col("_tombstone"), F.lit(False)),
+            key_stats=True,
         )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            raise ValueError(
-                f"batch {batch_id}: {bad} events with unknown op, null lsn, "
-                f"or null {key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
+        if not any(r["n"] for r in stats):
+            # empty batch: _commit_batch publishes no data dir
             shutil.rmtree(snap_abs, ignore_errors=True)
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
-                tag=tag,
-                summary={"operation": "merge", "events": 0},
-                retry_on_conflict=retry_on_conflict,
-            )
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n"]) - int(r["n_dels"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
-            )
-            for r in stats
-        ]
-        bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats}
-        key_bounds = {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats}
-        return table.commit_staged_delta(
-            snap_rel,
-            bucket_rows,
-            key_bounds=key_bounds,
-            key_blooms=pack_key_blooms(stats),
-            tag=tag,
-            lineage=lineage,
-            summary={
-                "operation": "merge",
-                "strategy": "delta",
-                "touched_buckets": len(touched),
-                # ids let concurrent rewrites prove bucket-disjointness
-                # when rebasing past this commit
-                "bucket_ids": sorted(touched),
-                "winners": sum(bucket_rows.values()),
-            },
-            retry_on_conflict=retry_on_conflict,
+        return _commit_batch(
+            table, stats, batch_id, tag, retry_on_conflict,
+            lambda touched, kw: table.commit_staged_delta(
+                snap_rel, **_delta_file_stats(stats), **kw
+            ),
+            strategy="delta",
         )
     except Exception:
         # nothing committed — reclaim the staged dir now (not waiting for
-        # expire_snapshots) and restore the handle's pre-batch schema
-        # state; idempotent with the empty-batch rmtree above
+        # expire_snapshots); idempotent with the empty-batch rmtree above
         shutil.rmtree(snap_abs, ignore_errors=True)
-        table.manifest["current_schema_id"] = saved_schema_id
-        table.manifest["schemas"] = saved_schemas
         raise
 
 
@@ -711,8 +707,6 @@ def _merge_shuffle(
 
 
 def _merged_schema(table: IceboxTable) -> StructType:
-    from pyspark.sql.types import IntegerType
-
     return StructType([*table.schema.fields]).add("_b", IntegerType())
 
 

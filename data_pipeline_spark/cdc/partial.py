@@ -47,16 +47,14 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..icebox.table import (
-    IceboxTable,
-    key_bloom_agg_exprs,
-    key_bloom_prep,
-    pack_key_blooms,
-)
+from ..icebox.table import IceboxTable
 from .apply import (
     _bad_event_pred,
-    _merged_schema,
+    _bucket_rollup,
+    _commit_batch,
+    _delta_file_stats,
     _op_rank_col,
+    _schema_rollback,
     normalize_events,
 )
 
@@ -236,182 +234,121 @@ def _apply_columnar(
     if table.has_tag(tag):
         return table
     key = table.key
-    saved_schema_id = table.manifest["current_schema_id"]
-    saved_schemas = dict(table.manifest["schemas"])
-    ev = normalize_events(events, table)
-    cols = [f.name for f in table.schema.fields if f.name != key]
-
-    folded = (
-        fold_fn(ev, key, cols)
-        .withColumn("_b", table.bucket_of())
-        .persist()
-    )
-    try:
-        stats = (
-            key_bloom_prep(folded, key)
-            .groupBy("_b")
-            .agg(
-                F.sum("_n_ev").alias("events_applied"),
-                F.max("_wm").alias("lsn_watermark"),
-                F.min("_wm").alias("_wm_min"),
-                F.sum("_bad").alias("bad_events"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum((~F.col("_live")).cast("long")).alias("n_dels"),
-                F.min(key).alias("_kmin"),
-                F.max(key).alias("_kmax"),
-                *key_bloom_agg_exprs(),
-            )
-            .collect()
+    with _schema_rollback(table):
+        ev = normalize_events(events, table)
+        cols = [f.name for f in table.schema.fields if f.name != key]
+        folded = (
+            fold_fn(ev, key, cols)
+            .withColumn("_b", table.bucket_of())
+            .persist()
         )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: {bad} malformed events — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
-                tag=tag,
-                summary={"operation": "merge", "events": 0},
-                retry_on_conflict=retry_on_conflict,
-            )
+        try:
+            delta_mode = merge_strategy == "delta"
+            stats = _bucket_rollup(folded, key, ~F.col("_live"), key_stats=delta_mode)
 
-        # optional in-order transport check: the columnar engines require
-        # LSN-ordered batches; an entirely-stale key is rendered HARMLESS
-        # by the row-level fresh/stale guard below, but its presence
-        # proves the transport is delivering out of order — and a key
-        # MIXING stale and fresh lsns in one batch folds stale column
-        # values silently (the disclosed columnar hole). enforce_order
-        # turns the detectable symptom (some key's newest lsn at or below
-        # the previous same-mode merge's global watermark) into a loud
-        # refusal so the disorder is caught before the mixed case bites.
-        # The watermark chain resets across non-columnar LOGICAL commits
-        # (rollback, row-mode merges) but looks THROUGH maintenance
-        # commits (compact/split/cluster/lineage — _last_logical_summary),
-        # or run_stream's interleaved maintenance would silently disable
-        # the refusal for the following epoch.
-        if enforce_order:
-            prev = _last_logical_summary(table)
-            if prev.get("mode") == mode and prev.get("lsn_watermark") is not None:
-                batch_min = min(int(r["_wm_min"]) for r in stats if r["n"])
-                if batch_min <= int(prev["lsn_watermark"]):
-                    table.manifest["current_schema_id"] = saved_schema_id
-                    table.manifest["schemas"] = saved_schemas
-                    raise ValueError(
-                        f"batch {batch_id}: out-of-order feed — a key's "
-                        f"newest lsn {batch_min} is <= the previous "
-                        f"{mode}-merge watermark {prev['lsn_watermark']}; "
-                        "the columnar engines require LSN-ordered batches "
-                        "(use merge_mode='row' for order-independent "
-                        "transports)"
-                    )
-
-        delta_mode = merge_strategy == "delta"
-        old = table.read(buckets=touched, internal=True)
-        if delta_mode:
-            # O(batch): only rows the batch's keys can touch; the keyed
-            # read path's manifest bounds already skipped foreign deltas
-            old = old.join(folded.select(key), key, "left_semi")
-        old = old.select(
-            F.col(key),
-            *[F.col(c).alias(f"_old_{c}") for c in cols],
-            F.col("_lsn").alias("_old_lsn"),
-            F.coalesce(F.col("_tombstone"), F.lit(False)).alias("_old_tomb"),
-        )
-
-        j = folded.join(old, key, "left" if delta_mode else "full_outer")
-        in_batch = F.col("_wm").isNotNull()
-        # stale guard: the whole batch predates the stored row → re-emit
-        # the stored row unchanged (see docstring)
-        fresh = in_batch & (
-            F.col("_old_lsn").isNull() | (F.col("_wm") >= F.col("_old_lsn"))
-        )
-        # old values survive only when the old row is live AND the batch
-        # did not delete past it (an intra-batch delete kills old values
-        # even when a later intra-batch event resurrects the key)
-        old_ok = (~F.coalesce(F.col("_old_tomb"), F.lit(True))) & (
-            ~F.col("_had_del")
-            | (F.col("_del_lsn") < F.coalesce(F.col("_old_lsn"), F.lit(-(1 << 62))))
-        )
-        types = {f.name: f.dataType for f in table.schema.fields}
-        merged_cols = []
-        for c in cols:
-            merged_cols.append(
-                F.when(
-                    ~fresh,  # old-only row or stale batch: keep stored
-                    F.col(f"_old_{c}"),
+            def publish(touched, kw):
+                # optional in-order transport check: the columnar engines
+                # require LSN-ordered batches; an entirely-stale key is
+                # rendered HARMLESS by the row-level fresh/stale guard
+                # (_resolve), but its presence proves the transport is
+                # delivering out of order — and a key MIXING stale and
+                # fresh lsns in one batch folds stale column values
+                # silently (the disclosed columnar hole). enforce_order
+                # turns the detectable symptom (some key's newest lsn at or
+                # below the previous same-mode merge's global watermark)
+                # into a loud refusal so the disorder is caught before the
+                # mixed case bites. The watermark chain resets across
+                # non-columnar LOGICAL commits (rollback, row-mode merges)
+                # but looks THROUGH maintenance commits (compact/split/
+                # cluster/lineage — _last_logical_summary), or run_stream's
+                # interleaved maintenance would silently disable the
+                # refusal for the following epoch.
+                if enforce_order:
+                    prev = _last_logical_summary(table)
+                    if prev.get("mode") == mode and prev.get("lsn_watermark") is not None:
+                        batch_min = min(int(r["_wm_min"]) for r in stats if r["n"])
+                        if batch_min <= int(prev["lsn_watermark"]):
+                            raise ValueError(
+                                f"batch {batch_id}: out-of-order feed — a key's "
+                                f"newest lsn {batch_min} is <= the previous "
+                                f"{mode}-merge watermark {prev['lsn_watermark']}; "
+                                "the columnar engines require LSN-ordered batches "
+                                "(use merge_mode='row' for order-independent "
+                                "transports)"
+                            )
+                # feeds the next batch's in-order enforcement
+                kw["summary"]["lsn_watermark"] = max(
+                    int(r["lsn_watermark"]) for r in stats if r["n"]
                 )
-                .when(~F.col("_live"), F.lit(None).cast(types[c]))
-                .otherwise(combine_fn(c, old_ok, types))
-                .alias(c)
-            )
-        resolved = j.select(
-            F.col(key),
-            *merged_cols,
-            F.when(~fresh, F.col("_old_lsn"))
-            .otherwise(F.greatest(F.col("_wm"), F.coalesce(F.col("_old_lsn"), F.col("_wm"))))
-            .alias("_lsn"),
-            F.when(~fresh, F.col("_old_tomb"))
-            .otherwise(~F.col("_live"))
-            .alias("_tombstone"),
-        ).withColumn("_b", table.bucket_of())
+                resolved = _resolve(table, folded, touched, cols, combine_fn, delta_mode)
+                if delta_mode:
+                    return table.commit_delta(resolved, **_delta_file_stats(stats), **kw)
+                return table.commit_rewrite(
+                    resolved, touched, collect_stats=False, **kw  # hot per-batch path
+                )
 
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n"]) - int(r["n_dels"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
+            return _commit_batch(
+                table, stats, batch_id, tag, retry_on_conflict, publish,
+                strategy="delta" if delta_mode else "shuffle", mode=mode,
             )
-            for r in stats
-        ]
-        summary = {
-            "operation": "merge",
-            "strategy": "delta" if delta_mode else "shuffle",
-            "mode": mode,
-            "touched_buckets": len(touched),
-            "bucket_ids": sorted(touched),
-            "winners": sum(int(r["n"]) for r in stats),
-            # feeds the next batch's in-order enforcement (above)
-            "lsn_watermark": max(
-                int(r["lsn_watermark"]) for r in stats if r["n"]
-            ),
-        }
-        if delta_mode:
-            bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats}
-            key_bounds = {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats}
-            return table.commit_delta(
-                resolved,
-                bucket_rows,
-                tag=tag,
-                lineage=lineage,
-                summary=summary,
-                key_bounds=key_bounds,
-                key_blooms=pack_key_blooms(stats),
-                retry_on_conflict=retry_on_conflict,
+        finally:
+            folded.unpersist()
+
+
+def _resolve(table, folded, touched, cols, combine_fn, delta_mode) -> DataFrame:
+    """The merged rows of a columnar batch: the fold joined to the
+    stored rows of the touched buckets (key-restricted on the delta
+    path), each column resolved per combine_fn, with `_lsn`,
+    `_tombstone` and `_b`."""
+    key = table.key
+    old = table.read(buckets=touched, internal=True)
+    if delta_mode:
+        # O(batch): only rows the batch's keys can touch; the keyed
+        # read path's manifest bounds already skipped foreign deltas
+        old = old.join(folded.select(key), key, "left_semi")
+    old = old.select(
+        F.col(key),
+        *[F.col(c).alias(f"_old_{c}") for c in cols],
+        F.col("_lsn").alias("_old_lsn"),
+        F.coalesce(F.col("_tombstone"), F.lit(False)).alias("_old_tomb"),
+    )
+
+    j = folded.join(old, key, "left" if delta_mode else "full_outer")
+    in_batch = F.col("_wm").isNotNull()
+    # stale guard: the whole batch predates the stored row → re-emit
+    # the stored row unchanged (see apply_batch_partial)
+    fresh = in_batch & (
+        F.col("_old_lsn").isNull() | (F.col("_wm") >= F.col("_old_lsn"))
+    )
+    # old values survive only when the old row is live AND the batch
+    # did not delete past it (an intra-batch delete kills old values
+    # even when a later intra-batch event resurrects the key)
+    old_ok = (~F.coalesce(F.col("_old_tomb"), F.lit(True))) & (
+        ~F.col("_had_del")
+        | (F.col("_del_lsn") < F.coalesce(F.col("_old_lsn"), F.lit(-(1 << 62))))
+    )
+    types = {f.name: f.dataType for f in table.schema.fields}
+    merged_cols = []
+    for c in cols:
+        merged_cols.append(
+            F.when(
+                ~fresh,  # old-only row or stale batch: keep stored
+                F.col(f"_old_{c}"),
             )
-        return table.commit_rewrite(
-            resolved,
-            touched,
-            tag=tag,
-            lineage=lineage,
-            summary=summary,
-            retry_on_conflict=retry_on_conflict,
-            collect_stats=False,  # hot per-batch path
+            .when(~F.col("_live"), F.lit(None).cast(types[c]))
+            .otherwise(combine_fn(c, old_ok, types))
+            .alias(c)
         )
-    except Exception:
-        table.manifest["current_schema_id"] = saved_schema_id
-        table.manifest["schemas"] = saved_schemas
-        raise
-    finally:
-        folded.unpersist()
+    return j.select(
+        F.col(key),
+        *merged_cols,
+        F.when(~fresh, F.col("_old_lsn"))
+        .otherwise(F.greatest(F.col("_wm"), F.coalesce(F.col("_old_lsn"), F.col("_wm"))))
+        .alias("_lsn"),
+        F.when(~fresh, F.col("_old_tomb"))
+        .otherwise(~F.col("_live"))
+        .alias("_tombstone"),
+    ).withColumn("_b", table.bucket_of())
 
 
 def replay_log_partial(

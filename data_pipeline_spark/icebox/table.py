@@ -1056,10 +1056,11 @@ class IceboxTable:
     def stage_delta(self, deltas: DataFrame, extra_cols: list[str] | None = None) -> str:
         """Write a delta file set for the NEXT snapshot WITHOUT committing;
         returns the staged dir (relative). The single heavy pass over the
-        batch: partition count is whatever AQE coalesced the upstream
-        dedup exchange to (~64 MB targets — small batches land in ONE
-        file, big ones in size-bounded files), rows sorted by (_b, key)
-        for row-group pruning. `extra_cols` (e.g. per-winner stats the
+        batch and every delta's one writer: partition count is whatever
+        AQE coalesced the upstream exchange to under the 8 MB advisory
+        scoped below (small batches land in ONE file, big ones in
+        size-bounded files), rows sorted by (_b, key) for row-group
+        pruning. `extra_cols` (e.g. per-winner stats the
         caller aggregates AFTER the write) ride along in the parquet —
         schema-projected reads never see them. A crash before the
         manifest publish leaves only this orphan dir (expire_snapshots
@@ -1178,20 +1179,25 @@ class IceboxTable:
         retry_on_conflict: int = 0,
     ) -> "IceboxTable":
         """Merge-on-read commit: append ONE compact delta file set instead
-        of rewriting buckets. `deltas` holds the batch's deduped winners
-        (payload + `_b` + `_lsn` + `_tombstone`, one row per key, deletes
-        as tombstone rows); `bucket_rows` maps touched bucket → winner
-        count (the caller's stats — no parquet footer reads needed).
+        of rewriting buckets — stage_delta, then (collect_stats) the zone
+        maps off the staged footers, then commit_staged_delta. `deltas`
+        holds the batch's deduped winners (payload + `_b` + `_lsn` +
+        `_tombstone`, one row per key, deletes as tombstone rows);
+        `bucket_rows` maps touched bucket → winner count (the caller's
+        stats — no parquet footer reads needed).
 
         Write cost is O(batch) — copy-on-write's O(touched-table)
         amplification (a uniformly-spread micro-batch rewrites every
-        bucket) never happens, and a small micro-batch writes a SINGLE
-        file, not #buckets hive-partitioned ones (per-commit file-commit
-        overhead is what caps small-batch throughput). `_b` is stored as a
-        data column, rows sorted by (_b, key), so bucket-pruned reads skip
-        foreign row groups via parquet min/max stats. Reads LWW-merge
-        base ∪ deltas per key on (_lsn, commit order); compact_if_needed
-        folds deltas back into base files.
+        bucket) never happens. Files are sized by stage_delta's scoped
+        8 MB adaptive advisory over the input's last exchange, so a
+        deduped micro-batch writes a SINGLE file, not #buckets
+        hive-partitioned ones (per-commit file-commit overhead is what
+        caps small-batch throughput); an input with no exchange keeps its
+        own partitioning. `_b` is stored as a data column, rows sorted by
+        (_b, key) within each file, so bucket-pruned reads skip foreign
+        row groups via parquet min/max stats. Reads LWW-merge base ∪
+        deltas per key on (_lsn, commit order); compact_if_needed folds
+        deltas back into base files.
 
         The reference's analog is appending new version= partitions
         instead of rewriting releases
@@ -1201,41 +1207,15 @@ class IceboxTable:
             return self
         if retry_on_conflict <= 0:
             self._check_current()  # fail fast before the delta write
-        snap_dirname = f"snap-{self.snapshot_id + 1:08d}-{uuid.uuid4().hex[:8]}"
-        snap_rel = os.path.join("data", snap_dirname)
-        snap_abs = os.path.join(self.root, snap_rel)
-
-        cols = [f.name for f in self.schema.fields] + INTERNAL_NAMES
-        n_rows = sum(bucket_rows.values())
-        # ~30k token rows ≈ 20 MB per write task; tiny batches → one file.
-        # coalesce, NOT repartition: the winners already crossed one
-        # exchange in the dedup aggregate — a second full shuffle purely
-        # for file sizing would double the per-batch network cost. Rows
-        # of a bucket may span files, but each file is sorted by (_b,
-        # key), so bucket-pruned reads still skip foreign row groups via
-        # parquet min/max stats.
-        npart = max(1, min(n_rows // 30_000 + 1, 1024))
-        (
-            deltas.select("_b", *cols)
-            .coalesce(npart)
-            .sortWithinPartitions("_b", self.key)
-            .write.mode("overwrite")
-            .parquet(snap_abs)
+        snap_rel = self.stage_delta(deltas)
+        # zone maps off the staged footers (driver-side, O(#files) footer
+        # reads). OFF by default: the hot CDC apply path's per-batch
+        # constant matters more than analytics pruning on never-compacted
+        # deltas — compaction harvests bounds anyway.
+        col_bounds = (
+            _harvest_col_bounds([os.path.join(self.root, snap_rel)], self.schema)
+            if collect_stats else None
         )
-        col_bounds = None
-        if collect_stats:
-            # zone maps off the staged footers (driver-side, O(#files)
-            # footer reads). OFF by default: the hot CDC apply path's
-            # per-batch constant matters more than analytics pruning on
-            # never-compacted deltas — compaction harvests bounds anyway.
-            write_logical = StructType.fromJson(
-                json.loads(
-                    self.manifest["schemas"][
-                        str(self.manifest["current_schema_id"])
-                    ]
-                )
-            )
-            col_bounds = _harvest_col_bounds([snap_abs], write_logical)
         return self.commit_staged_delta(
             snap_rel, bucket_rows, tag=tag, lineage=lineage, summary=summary,
             key_bounds=key_bounds, key_blooms=key_blooms,

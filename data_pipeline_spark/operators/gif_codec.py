@@ -32,6 +32,10 @@ _HEADERS = (b"GIF87a", b"GIF89a")
 # untrusted 13-byte header chooses (up to 65535 x 65535, ~12.9 GB as RGB):
 # refuse anything over 4096 x 4096 pixels (48 MB) before allocating
 MAX_CANVAS_PIXELS = 1 << 24
+# every rendered frame is a full-canvas copy, so a few bytes per image
+# descriptor cost a whole canvas each: cap frames x canvas pixels at
+# 64 Mpx (192 MB as RGB), e.g. 4 frames of a 4096 x 4096 screen
+MAX_FRAMES_PIXELS = 1 << 26
 
 
 def is_gif(buf: bytes) -> bool:
@@ -227,7 +231,8 @@ def _deinterlace(rows: np.ndarray) -> np.ndarray:
 def decode_frames(buf: bytes) -> tuple[list[np.ndarray], list[int]]:
     """Full render: (frames as (H, W, 3) uint8 composited per the GIF
     disposal model, per-frame delays in centiseconds). Raises
-    ValueError for a logical screen over MAX_CANVAS_PIXELS."""
+    ValueError for a logical screen over MAX_CANVAS_PIXELS, or for more
+    frames than fit MAX_FRAMES_PIXELS."""
     w, h, gct_off, gct_size, pos = _screen(buf)
     if w * h > MAX_CANVAS_PIXELS:
         raise ValueError(
@@ -292,6 +297,11 @@ def decode_frames(buf: bytes) -> tuple[list[np.ndarray], list[int]]:
                 rect[...] = np.where(mask, px, rect)
             else:
                 rect[...] = px
+            if (len(frames) + 1) * w * h > MAX_FRAMES_PIXELS:
+                raise ValueError(
+                    f"corrupt GIF: {len(frames) + 1} frames of a {w}x{h} "
+                    f"canvas exceed {MAX_FRAMES_PIXELS} pixels"
+                )
             frames.append(canvas.copy())
             delays.append(delay)
             if disposal == 2:  # restore to background

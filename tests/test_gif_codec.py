@@ -242,6 +242,17 @@ def test_corrupt_gifs_are_loud():
     )
     with pytest.raises(ValueError, match="canvas exceeds"):
         gc.decode_frames(huge)
+    # a 4096x4096 screen (at the canvas cap) with one-pixel frames: each
+    # 13-byte descriptor would cost a 48 MB canvas copy, so the frame
+    # past MAX_FRAMES_PIXELS is refused
+    n_frames = gc.MAX_FRAMES_PIXELS // (4096 * 4096) + 1
+    one_px = b"\x2c" + struct.pack("<HHHH", 0, 0, 1, 1) + b"\x00\x02\x02\x4c\x01\x00"
+    many = (
+        b"GIF89a" + struct.pack("<HHBBB", 4096, 4096, 0x80, 0, 0) + bytes(6)
+        + one_px * n_frames + b"\x3b"
+    )
+    with pytest.raises(ValueError, match="frames of a 4096x4096 canvas exceed"):
+        gc.decode_frames(many)
 
 
 def test_multimodal_stages_on_real_gif(spark):

@@ -19,6 +19,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_pipeline_spark.cdc import apply_batch
+from data_pipeline_spark.cdc.aggregate import apply_batch_agg
+from data_pipeline_spark.cdc.partial import apply_batch_partial
 from data_pipeline_spark.icebox import IceboxTable
 from data_pipeline_spark.icebox.table import ConcurrentCommitError, bucket_expr
 
@@ -313,3 +315,32 @@ def test_stale_handle_loses_every_snapshot_op(spark, tdir, op):
     assert fresh.snapshot_id == winner.snapshot_id
     assert fresh.manifest["committed_tags"] == winner.manifest["committed_tags"]
     assert set(_state(fresh)) == {"d0", "d1", "w"}
+
+
+ENGINES = {
+    "row-delta": lambda t, ev: apply_batch(t, ev, "wb", merge_strategy="delta"),
+    "row-shuffle": lambda t, ev: apply_batch(t, ev, "wb", merge_strategy="shuffle"),
+    "row-join": lambda t, ev: apply_batch(t, ev, "wb", merge_strategy="join"),
+    "partial-delta": lambda t, ev: apply_batch_partial(
+        t, ev, "wb", merge_strategy="delta"),
+    "partial-shuffle": lambda t, ev: apply_batch_partial(
+        t, ev, "wb", merge_strategy="shuffle"),
+    "aggregate-delta": lambda t, ev: apply_batch_agg(
+        t, ev, "wb", {"n_tok": "sum"}, merge_strategy="delta"),
+}
+
+
+@pytest.mark.parametrize("engine", sorted(ENGINES))
+def test_failed_apply_rolls_back_schema_on_every_engine(spark, two_handles, engine):
+    """Schema-evolution rollback holds for every engine and strategy: a
+    stale handle applies a batch that adds a column, loses the commit
+    race with ConcurrentCommitError, and keeps its pre-batch schema."""
+    a, b = two_handles
+    apply_batch(a, _batch(spark, 100, [("a1", [1], 1, "s1")]), "wa",
+                merge_strategy="delta")
+    schema, schemas = b.schema, dict(b.manifest["schemas"])
+    ev = _batch(spark, 200, [("b1", [2], 1, "s2")]).withColumn("lang", F.lit("en"))
+    with pytest.raises(ConcurrentCommitError):
+        ENGINES[engine](b, ev)
+    assert b.schema == schema
+    assert b.manifest["schemas"] == schemas
